@@ -57,12 +57,17 @@ class _BitReader:
         self.pos = 0
 
     def read(self, bits: int) -> int:
-        out = 0
-        for _ in range(bits):
-            byte = self.data[self.pos >> 3]
-            out = (out << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
+        """Next ``bits`` bits, MSB first.  One ``int.from_bytes`` over only
+        the bytes the code covers keeps each read O(bits); shifting the
+        whole buffer instead would make a long chunk's decode quadratic."""
+        pos = self.pos
+        end = pos + bits
+        self.pos = end
+        if bits == 1:  # the flag bits: most reads of a chunk
+            return (self.data[pos >> 3] >> (7 - (pos & 7))) & 1
+        last = (end + 7) >> 3
+        word = int.from_bytes(self.data[pos >> 3:last], "big")
+        return (word >> ((last << 3) - end)) & ((1 << bits) - 1)
 
 
 # ---- timestamps: delta-of-delta ---------------------------------------------

@@ -4,7 +4,8 @@ around the sequential kernels in kernels/ewm_numpy.py.
 This is the engine's one JVM↔Python boundary (SURVEY.md §3.4): per key the
 group arrives as a pandas DataFrame over Arrow, is swept once by the NumPy
 kernel, and returns the output column plus (for the ``*_`` stateful variants)
-one packed state row.  No per-row Python anywhere (input_hint requirement) —
+the final state on the group's last row — operators/_boundary.py owns what
+crosses the boundary.  No per-row Python anywhere (input_hint requirement) —
 the kernel loop is per-row *inside* one vectorized batch, the same shape as
 the reference's numba kernels.
 
@@ -25,17 +26,13 @@ convention _decorators.py:21-31.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import ewm_numpy
-from pyg_timeseries_spark.kernels.ewm_numpy import STATE_LEN
+from pyg_timeseries_spark.kernels.ewm_numpy import GSTATE_LEN, STATE_LEN
+from pyg_timeseries_spark.operators._boundary import split_state, sweep_apply
 from pyg_timeseries_spark.operators._core import KEY, TS, VAL
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 
 
 def state_schema(key: str = KEY) -> T.StructType:
@@ -47,15 +44,7 @@ def state_schema(key: str = KEY) -> T.StructType:
     )
 
 
-def _with_prior(df: DataFrame, state_df: DataFrame | None, key: str) -> DataFrame:
-    if state_df is None:
-        return df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-    # state is one small row per key — always broadcast, never shuffle the fact side
-    return df.join(F.broadcast(prior), on=key, how="left")
-
-
-def _ewm_combined(
+def _ewm_apply(
     df: DataFrame,
     kernel_name: str,
     n: float,
@@ -67,46 +56,26 @@ def _ewm_combined(
     state_df: DataFrame | None,
     kernel_kwargs: dict,
     wgt_col: str | None = None,
+    stateful: bool = False,
 ) -> DataFrame:
-    """One applyInPandas pass emitting data rows + a packed state column that
-    is non-null only on the group's last row."""
+    """One applyInPandas pass through the kernel boundary (_boundary.py)."""
     kernel = ewm_numpy.KERNELS[kernel_name]
-    src = _with_prior(df, state_df, key)
-    out_fields = [f for f in df.schema.fields] + [
-        T.StructField(out, T.DoubleType()),
-        T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-    ]
-    out_schema = T.StructType(out_fields)
-    in_cols = [f.name for f in df.schema.fields]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        time = (
-            pdf[time_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if time_col
-            else None
-        )
-        wgt = (
-            pdf[wgt_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if wgt_col
-            else None
-        )
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None
-            and len(list(prior)) in (STATE_LEN, ewm_numpy.GSTATE_LEN)
-            else None
-        )
-        res, s = kernel(a, n, time=time, wgt=wgt, state=state, **kernel_kwargs)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
+    def col(pdf, c):
+        return pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) if c else None
 
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    def sweep(pdf, prior):
+        res, s = kernel(col(pdf, v), n, time=col(pdf, time_col),
+                        wgt=col(pdf, wgt_col), state=prior, **kernel_kwargs)
+        return [res], s
+
+    # exc_zero / max_move select the guarded sweep, whose state is longer
+    guarded = (kernel_kwargs.get("exc_zero")
+               or kernel_kwargs.get("max_move") is not None)
+    return sweep_apply(
+        df, [key], ts, [out], sweep, state_df=state_df,
+        prior_lens=(STATE_LEN, GSTATE_LEN), stateful=stateful,
+        state_len=GSTATE_LEN if guarded else STATE_LEN)
 
 
 def _make_op(kernel_name: str, default_out: str):
@@ -122,11 +91,10 @@ def _make_op(kernel_name: str, default_out: str):
         state_df: DataFrame | None = None,
         **kernel_kwargs,
     ) -> DataFrame:
-        combined = _ewm_combined(
+        return _ewm_apply(
             df, kernel_name, n, key, ts, v, out, time_col, state_df,
             kernel_kwargs, wgt_col=wgt_col,
         )
-        return combined.drop(_STATE_COL)
 
     def op_(
         df: DataFrame,
@@ -144,18 +112,11 @@ def _make_op(kernel_name: str, default_out: str):
         """Stateful variant: returns (data, state) — the reference's
         ``Dict(data=…, state=…)`` pair (_decorators.py:21-31).  The combined
         frame is persisted so data and state come from one computation."""
-        combined = _ewm_combined(
+        combined = _ewm_apply(
             df, kernel_name, n, key, ts, v, out, time_col, state_df,
-            kernel_kwargs, wgt_col=wgt_col,
+            kernel_kwargs, wgt_col=wgt_col, stateful=True,
         )
-        if persist:
-            combined = combined.persist()
-        data = combined.drop(_STATE_COL)
-        state = (
-            combined.filter(F.col(_STATE_COL).isNotNull())
-            .select(F.col(key), F.col(_STATE_COL).alias("state"))
-        )
-        return data, state
+        return split_state(combined, [key], persist)
 
     op.__name__ = kernel_name
     op_.__name__ = kernel_name + "_"

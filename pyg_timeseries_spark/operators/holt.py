@@ -22,16 +22,12 @@ packable to array<double>.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import cnative as _cnative
+from pyg_timeseries_spark.operators._boundary import split_state, sweep_apply
 from pyg_timeseries_spark.operators._core import KEY, TS, VAL
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 HOLT_STATE_LEN = 3  # [seen, level, trend]
 
 
@@ -72,41 +68,16 @@ def holt_kernel(
     return out, np.array([seen, lvl, trd], dtype=np.float64)
 
 
-def _holt_combined(df, alpha, beta, horizon, key, ts, v, out, state_df):
-    src = df
-    if state_df is None:
-        src = src.withColumn(
-            _PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType()))
-        )
-    else:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = src.join(F.broadcast(prior), on=key, how="left")
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(out, T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
+def _holt_apply(df, alpha, beta, horizon, key, ts, v, out, state_df,
+                stateful=False):
+    def sweep(pdf, prior):
         a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == HOLT_STATE_LEN
-            else None
-        )
-        res, s = holt_kernel(a, alpha, beta, horizon, state=state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
+        res, s = holt_kernel(a, alpha, beta, horizon, state=prior)
+        return [res], s
 
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
+                       prior_lens=HOLT_STATE_LEN, stateful=stateful,
+                       state_len=HOLT_STATE_LEN)
 
 
 def holt(
@@ -121,9 +92,7 @@ def holt(
     state_df: DataFrame | None = None,
 ) -> DataFrame:
     """Fitted Holt level (or h-step forecast) per row."""
-    return _holt_combined(
-        df, alpha, beta, horizon, key, ts, v, out, state_df
-    ).drop(_STATE_COL)
+    return _holt_apply(df, alpha, beta, horizon, key, ts, v, out, state_df)
 
 
 def holt_(
@@ -139,16 +108,9 @@ def holt_(
     persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stateful variant: (data, state) pair, resumable bit-for-bit."""
-    combined = _holt_combined(
-        df, alpha, beta, horizon, key, ts, v, out, state_df
-    )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _holt_apply(df, alpha, beta, horizon, key, ts, v, out,
+                           state_df, stateful=True)
+    return split_state(combined, [key], persist)
 
 
 # ---------------------------------------------------------------------------
@@ -226,42 +188,15 @@ def holt_winters_kernel(
     return out, np.concatenate(([seen, lvl, trd], sea))
 
 
-def _hw_combined(df, alpha, beta, gamma, m, key, ts, v, out, state_df):
-    src = df
-    if state_df is None:
-        src = src.withColumn(
-            _PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType()))
-        )
-    else:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = src.join(F.broadcast(prior), on=key, how="left")
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(out, T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
-    state_len = 3 + m
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
+def _hw_apply(df, alpha, beta, gamma, m, key, ts, v, out, state_df,
+              stateful=False):
+    def sweep(pdf, prior):
         a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == state_len
-            else None
-        )
-        res, s = holt_winters_kernel(a, alpha, beta, gamma, m, state=state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
+        res, s = holt_winters_kernel(a, alpha, beta, gamma, m, state=prior)
+        return [res], s
 
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
+                       prior_lens=3 + m, stateful=stateful, state_len=3 + m)
 
 
 def holt_winters(
@@ -278,9 +213,7 @@ def holt_winters(
 ) -> DataFrame:
     """Additive Holt-Winters fitted level+season per row (warm-up rows
     pass x through — convention in holt_winters_kernel)."""
-    return _hw_combined(
-        df, alpha, beta, gamma, m, key, ts, v, out, state_df
-    ).drop(_STATE_COL)
+    return _hw_apply(df, alpha, beta, gamma, m, key, ts, v, out, state_df)
 
 
 def holt_winters_(
@@ -297,13 +230,6 @@ def holt_winters_(
     persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stateful variant: (data, state) pair, resumable bit-for-bit."""
-    combined = _hw_combined(
-        df, alpha, beta, gamma, m, key, ts, v, out, state_df
-    )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _hw_apply(df, alpha, beta, gamma, m, key, ts, v, out,
+                         state_df, stateful=True)
+    return split_state(combined, [key], persist)

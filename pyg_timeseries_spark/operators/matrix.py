@@ -10,55 +10,65 @@ arrays (melt with posexplode when relational access is wanted).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import matrix_numpy as MK
+from pyg_timeseries_spark.operators._boundary import split_state, sweep_apply
 from pyg_timeseries_spark.operators._core import KEY, TS
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 
+def _matrix_apply(df, key, ts, out, state_df, run, stateful=False):
+    """``run(pdf, prior) -> (per-row result arrays, state)``.  The state's
+    length depends on the feature width m, so ``run`` validates the prior
+    and the state width is open."""
 
-def _matrix_apply(df, key, ts, build_inputs, run, out, state_df, state_len):
-    if state_df is not None:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out, T.ArrayType(T.DoubleType())),
-           T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
+    def sweep(pdf, prior):
+        res, s = run(pdf, prior)
+        return [[None if np.isnan(r).all() else [float(x) for x in r.ravel()]
+                 for r in res]], s
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        inputs = build_inputs(pdf)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), float)
-            if prior is not None and (state_len < 0 or len(list(prior)) == state_len)
-            else None
-        )
-        res, s = run(*inputs, state)
-        outp = pdf[in_cols].copy()
-        outp[out] = [
-            None if np.isnan(r).all() else [float(x) for x in r.ravel()]
-            for r in res
-        ]
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return sweep_apply(df, [key], ts, [out], sweep,
+                       out_type=T.ArrayType(T.DoubleType()), state_df=state_df,
+                       stateful=stateful)
 
 
 def _features_matrix(pdf, features):
     return np.array([np.asarray(r, float) for r in pdf[features]])
+
+
+def _fits(state, n):
+    """The saved state when it has the kernel's length, else None (restart)."""
+    return state if state is not None and len(state) == n else None
+
+
+def _aai(n, features, min_sample, overlapping):
+    def run(pdf, prior):
+        A = _features_matrix(pdf, features)
+        state = _fits(prior, MK.aai_state_len(A.shape[1], overlapping))
+        return MK.ewmAAi(A, n, state=state, min_sample=min_sample,
+                         overlapping=overlapping)
+    return run
+
+
+def _glm(n, features, b, min_sample, overlapping):
+    def run(pdf, prior):
+        A = _features_matrix(pdf, features)
+        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
+        state = _fits(prior, MK.glm_state_len(A.shape[1], overlapping))
+        return MK.ewmGLM(A, bv, n, state=state, min_sample=min_sample,
+                         overlapping=overlapping)
+    return run
+
+
+def _psd(n, features, min_sample, min_periods, demean, shrinkage):
+    def run(pdf, prior):
+        A = _features_matrix(pdf, features)
+        return MK.ewmcorr_psd(A, n, min_sample=min_sample,
+                              min_periods=min_periods, demean=demean,
+                              shrinkage=shrinkage,
+                              state=_fits(prior, MK.psd_state_len(A.shape[1])))
+    return run
 
 
 def ewmAAi(df: DataFrame, n: float, features: str = "features",
@@ -67,45 +77,18 @@ def ewmAAi(df: DataFrame, n: float, features: str = "features",
            state_df: DataFrame | None = None) -> DataFrame:
     """Rolling inv(E(dAᵀdA)) per row; output flattened (m·m) row-major.
     ``overlapping`` k differences against the value k valid rows back."""
-
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    # state length depends on m, so validate inside the kernel call
-    def run2(A, state):
-        if state is not None and len(state) != MK.aai_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmAAi(A, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _matrix_apply(df, key, ts, out, state_df,
+                         _aai(n, features, min_sample, overlapping))
 
 
 def ewmAAi_(df: DataFrame, n: float, features: str = "features",
             key: str = KEY, ts: str = TS, out: str = "aai",
             min_sample: float = 0.25, overlapping: int = 1,
             state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    def run2(A, state):
-        if state is not None and len(state) != MK.aai_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmAAi(A, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _matrix_apply(df, key, ts, out, state_df,
+                             _aai(n, features, min_sample, overlapping),
+                             stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def ewmGLM(df: DataFrame, n: float, features: str = "features",
@@ -113,48 +96,18 @@ def ewmGLM(df: DataFrame, n: float, features: str = "features",
            min_sample: float = 0.25, overlapping: int = 1,
            state_df: DataFrame | None = None) -> DataFrame:
     """EWM linear-model betas of db ~ dA per row; output (m,) array."""
-
-    def build(pdf):
-        A = _features_matrix(pdf, features)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        return (A, bv)
-
-    def run2(A, bv, state):
-        if state is not None and len(state) != MK.glm_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmGLM(A, bv, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _matrix_apply(df, key, ts, out, state_df,
+                         _glm(n, features, b, min_sample, overlapping))
 
 
 def ewmGLM_(df: DataFrame, n: float, features: str = "features",
             b: str = "v", key: str = KEY, ts: str = TS, out: str = "betas",
             min_sample: float = 0.25, overlapping: int = 1,
             state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        A = _features_matrix(pdf, features)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        return (A, bv)
-
-    def run2(A, bv, state):
-        if state is not None and len(state) != MK.glm_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmGLM(A, bv, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _matrix_apply(df, key, ts, out, state_df,
+                             _glm(n, features, b, min_sample, overlapping),
+                             stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def ewmcorr_psd(df: DataFrame, n: float = 128, features: str = "features",
@@ -164,20 +117,8 @@ def ewmcorr_psd(df: DataFrame, n: float = 128, features: str = "features",
                 state_df: DataFrame | None = None) -> DataFrame:
     """PSD-by-construction EWM correlation per row (flattened m·m);
     reference `_ewm_psd.py:43-287` (overlapping=1 path)."""
-
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    def run2(A, state):
-        if state is not None and len(state) != MK.psd_state_len(A.shape[1]):
-            state = None
-        return MK.ewmcorr_psd(A, n, min_sample=min_sample,
-                              min_periods=min_periods, demean=demean,
-                              shrinkage=shrinkage, state=state)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _matrix_apply(df, key, ts, out, state_df, _psd(
+        n, features, min_sample, min_periods, demean, shrinkage))
 
 
 def ewmcorr_psd_(df: DataFrame, n: float = 128, features: str = "features",
@@ -185,21 +126,6 @@ def ewmcorr_psd_(df: DataFrame, n: float = 128, features: str = "features",
                  min_sample: float = 0.25, min_periods: int = 1,
                  demean: bool = True, shrinkage: float = 0.0,
                  state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    def run2(A, state):
-        if state is not None and len(state) != MK.psd_state_len(A.shape[1]):
-            state = None
-        return MK.ewmcorr_psd(A, n, min_sample=min_sample,
-                              min_periods=min_periods, demean=demean,
-                              shrinkage=shrinkage, state=state)
-
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _matrix_apply(df, key, ts, out, state_df, _psd(
+        n, features, min_sample, min_periods, demean, shrinkage), stateful=True)
+    return split_state(combined, [key], persist)

@@ -23,31 +23,25 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import multibuffer_numpy as MB
+from pyg_timeseries_spark.operators._boundary import kernel_apply, split_state
 from pyg_timeseries_spark.operators._core import KEY, TS
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
+
+def _out_fields(key: str, ts_field: T.StructField) -> list[T.StructField]:
+    return [
+        T.StructField(key, T.StringType()),
+        ts_field,
+        T.StructField("asset", T.StringType()),
+        T.StructField("pos", T.DoubleType()),
+        T.StructField("mult", T.DoubleType()),
+        T.StructField("mismatch", T.DoubleType()),
+    ]
 
 
-def _out_schema(key: str, ts_field: T.StructField) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            ts_field,
-            T.StructField("asset", T.StringType()),
-            T.StructField("pos", T.DoubleType()),
-            T.StructField("mult", T.DoubleType()),
-            T.StructField("mismatch", T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-
-def _multibuffer_combined(
+def _multibuffer_apply(
     df: DataFrame,
     corr: DataFrame | float | None,
     key: str,
@@ -56,19 +50,15 @@ def _multibuffer_combined(
     risk_band: float,
     rounding_band: float,
     state_df: DataFrame | None,
+    stateful: bool = False,
 ) -> DataFrame:
     ts_field = next(f for f in df.schema.fields if f.name == ts)
-    out_schema = _out_schema(key, ts_field)
+    fields = _out_fields(key, ts_field)
     near = corr if isinstance(corr, (int, float)) or corr is None else None
-    if state_df is not None:
-        pr = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        df = df.join(F.broadcast(pr), on=key, how="left")
-    else:
-        df = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
 
-    def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame | None, st):
         if len(pos_pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
+            return pd.DataFrame(columns=[f.name for f in fields]), None
         k_val = pos_pdf[key].iloc[0]
         val_cols = [c for c in ("target", "band", "vol", "pv")
                     if c in pos_pdf.columns]
@@ -116,8 +106,6 @@ def _multibuffer_combined(
                     if i is None or j is None:
                         continue
                     C[i, j] = C[j, i] = r.cor
-        pr = pos_pdf[_PRIOR_COL].iloc[0]
-        st = np.asarray(list(pr), float) if pr is not None else None
         if st is not None and len(st) != kk + 1:
             st = None  # asset set changed — restart
         positions, mult, mismatch, s_out = MB.multibuffer_sweep(
@@ -135,25 +123,16 @@ def _multibuffer_combined(
                         "pos": positions[:, ai],
                         "mult": mult,
                         "mismatch": mismatch,
-                        _STATE_COL: None,
                     }
                 )
             )
-        out = pd.concat(frames, ignore_index=True)
-        out.at[len(out) - 1, _STATE_COL] = [float(x) for x in s_out]
-        return out
+        return pd.concat(frames, ignore_index=True), s_out
 
+    boundary = dict(state_df=state_df, stateful=stateful)
     if isinstance(corr, DataFrame):
-        return (
-            df.groupBy(key)
-            .cogroup(corr.groupBy(key))
-            .applyInPandas(run, schema=out_schema)
-        )
-
-    def run_solo(pdf: pd.DataFrame) -> pd.DataFrame:
-        return run(pdf, None)
-
-    return df.groupBy(key).applyInPandas(run_solo, schema=out_schema)
+        return kernel_apply(df, [key], run, fields, other=corr, **boundary)
+    return kernel_apply(df, [key], lambda pdf, st: run(pdf, None, st), fields,
+                        **boundary)
 
 
 def multibuffer(
@@ -169,9 +148,9 @@ def multibuffer(
     """Risk-targeted buffered positions: rows (key, ts, asset, pos, mult,
     mismatch).  ``corr``: None → identity, float → near-correlation, or a
     melted frame (key[, ts], asset_i, asset_j, cor)."""
-    return _multibuffer_combined(
+    return _multibuffer_apply(
         df, corr, key, ts, unit, risk_band, rounding_band, state_df
-    ).drop(_STATE_COL)
+    )
 
 
 def multibuffer_(
@@ -187,13 +166,8 @@ def multibuffer_(
 ):
     """(data, state): state is one [m, pos_0..pos_{k-1}] row per portfolio
     (assets sorted by name) — resume is bit-exact."""
-    combined = _multibuffer_combined(
-        df, corr, key, ts, unit, risk_band, rounding_band, state_df
+    combined = _multibuffer_apply(
+        df, corr, key, ts, unit, risk_band, rounding_band, state_df,
+        stateful=True,
     )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    return split_state(combined, [key], persist)

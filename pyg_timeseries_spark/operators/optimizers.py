@@ -23,10 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import opt_numpy as OPT
+from pyg_timeseries_spark.operators._boundary import kernel_apply, split_state
 from pyg_timeseries_spark.operators._core import TS
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 
 
 def _pivot_matrix(pdf: pd.DataFrame, ts: str, val: str):
@@ -157,25 +155,17 @@ def minimize_tracking_error(
     cogrouped per portfolio.  Returns rows (key, ts, asset, pos, err)
     (+ state when ``stateful``)."""
     ts_field = next(f for f in df.schema.fields if f.name == ts)
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            ts_field,
-            T.StructField(asset, T.StringType()),
-            T.StructField("pos", T.DoubleType()),
-            T.StructField("err", T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    if state_df is not None:
-        pr = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        df = df.join(F.broadcast(pr), on=key, how="left")
-    else:
-        df = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
+    fields = [
+        T.StructField(key, T.StringType()),
+        ts_field,
+        T.StructField(asset, T.StringType()),
+        T.StructField("pos", T.DoubleType()),
+        T.StructField("err", T.DoubleType()),
+    ]
 
-    def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame, st):
         if len(pos_pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
+            return pd.DataFrame(columns=[f.name for f in fields]), None
         k_val = pos_pdf[key].iloc[0]
         panel = pos_pdf.pivot_table(index=ts, columns=asset, values=[target],
                                     sort=True, dropna=False)
@@ -190,8 +180,6 @@ def minimize_tracking_error(
             if i is None or j is None:
                 continue
             C[i, j] = C[j, i] = getattr(r, val)
-        pr = pos_pdf[_PRIOR_COL].iloc[0]
-        st = np.asarray(list(pr), float) if pr is not None else None
         if st is not None and len(st) != kk:
             st = None
         pos, errs, s_out = OPT.minimize_tracking_error_sweep(
@@ -201,24 +189,13 @@ def minimize_tracking_error(
         for ai, a in enumerate(assets):
             frames.append(pd.DataFrame({
                 key: k_val, ts: times, asset: a,
-                "pos": pos[:, ai], "err": errs, _STATE_COL: None,
+                "pos": pos[:, ai], "err": errs,
             }))
-        o = pd.concat(frames, ignore_index=True)
-        o.at[len(o) - 1, _STATE_COL] = [float(x) for x in s_out]
-        return o
+        return pd.concat(frames, ignore_index=True), s_out
 
-    combined = (
-        df.groupBy(key).cogroup(cov.groupBy(key)).applyInPandas(run, out_schema)
-    )
-    if not stateful:
-        return combined.drop(_STATE_COL)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = kernel_apply(df, [key], run, fields, state_df=state_df,
+                            stateful=stateful, other=cov)
+    return split_state(combined, [key], persist) if stateful else combined
 
 
 def minimize_tracking_error_(df, cov, **kw):

@@ -17,143 +17,99 @@ applyInPandas group-size envelope the engine is designed for.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import pairwise_numpy as PK
+from pyg_timeseries_spark.operators._boundary import split_state, sweep_apply
 from pyg_timeseries_spark.operators._core import KEY, TS, VAL
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 
 
 def _pair_apply(df, key_cols, ts, a, b, out_cols, state_df, run,
-                time_col=None):
-    if state_df is not None:
-        prior = state_df.select(*key_cols, F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key_cols, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType()) for c in out_cols]
-        + [T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
+                time_col=None, stateful=False):
+    def col(pdf, c):
+        return pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) if c else None
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        av = pdf[a].to_numpy(dtype=np.float64, na_value=np.nan)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        tv = (
-            pdf[time_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if time_col
-            else None
-        )
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), float)
-            if prior is not None and len(list(prior)) == PK.XSTATE_LEN
-            else None
-        )
-        results, s = run(av, bv, state, tv)
-        outp = pdf[in_cols].copy()
-        for c, r in zip(out_cols, results):
-            outp[c] = r
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
+    def sweep(pdf, prior):
+        return run(col(pdf, a), col(pdf, b), prior, col(pdf, time_col))
 
-    return src.groupBy(*key_cols).applyInPandas(fn, schema=out_schema)
+    return sweep_apply(df, key_cols, ts, out_cols, sweep, state_df=state_df,
+                       prior_lens=PK.XSTATE_LEN, stateful=stateful,
+                       state_len=PK.XSTATE_LEN)
 
 
-def _split_state(combined: DataFrame, key_cols: list, persist: bool):
-    """(data, state) from one combined frame — one computation, reference
-    (data, state) contract (_decorators.py:21-31)."""
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        *key_cols, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+# kernel runs: (a, b, state, time) -> ([outputs], state)
+
+def _xcor(n, bias):
+    def run(av, bv, state, tv):
+        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
+        return [res], s
+    return run
+
+
+def _xcovar(n):
+    def run(av, bv, state, tv):
+        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
+        return [res], s
+    return run
+
+
+def _xlr(n, bias):
+    def run(av, bv, state, tv):
+        c, m, s = PK.ewmxLR(av, bv, n, time=tv, state=state, bias=bias)
+        return [c, m], s
+    return run
 
 
 def ewmxcor(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
             ts: str = TS, out: str = "ewmxcor", bias: bool = False,
             time_col: str | None = None,
             state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
-    return _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_apply(df, [key], ts, a, b, [out], state_df, _xcor(n, bias),
+                       time_col=time_col)
 
 
 def ewmxcor_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
              ts: str = TS, out: str = "ewmxcor", bias: bool = False,
              time_col: str | None = None,
              state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_apply(df, [key], ts, a, b, [out], state_df,
+                           _xcor(n, bias), time_col=time_col, stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def ewmxcovar(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
               ts: str = TS, out: str = "ewmxcovar",
               time_col: str | None = None,
               state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
-    return _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_apply(df, [key], ts, a, b, [out], state_df, _xcovar(n),
+                       time_col=time_col)
 
 
 def ewmxcovar_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
                ts: str = TS, out: str = "ewmxcovar",
                time_col: str | None = None,
                state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_apply(df, [key], ts, a, b, [out], state_df, _xcovar(n),
+                           time_col=time_col, stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def ewmxLR(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
            ts: str = TS, out_c: str = "lr_c", out_m: str = "lr_m",
            bias: bool = False, time_col: str | None = None,
            state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        c, m, s = PK.ewmxLR(av, bv, n, time=tv, state=state, bias=bias)
-        return [c, m], s
-
-    return _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df,
+                       _xlr(n, bias), time_col=time_col)
 
 
 def ewmxLR_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
             ts: str = TS, out_c: str = "lr_c", out_m: str = "lr_m",
             bias: bool = False, time_col: str | None = None,
             state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        c, m, s = PK.ewmxLR(av, bv, n, time=tv, state=state, bias=bias)
-        return [c, m], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df,
+                           _xlr(n, bias), time_col=time_col, stateful=True)
+    return split_state(combined, [key], persist)
 
 
 # ---- melted (t, m, m) tensors ----------------------------------------------
@@ -171,15 +127,11 @@ def _melt_pairs(df: DataFrame, key: str, ts: str, v: str,
     return pairs
 
 
-def _correlation_combined(df, n, key, ts, v, bias, state_df, out):
-    pairs = _melt_pairs(df, key, ts, v)
-
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
+def _correlation_apply(df, n, key, ts, v, bias, state_df, out,
+                       stateful=False):
     return _pair_apply(
-        pairs, ["key_i", "key_j"], ts, "v_i", "v_j", [out], state_df, run
+        _melt_pairs(df, key, ts, v), ["key_i", "key_j"], ts, "v_i", "v_j",
+        [out], state_df, _xcor(n, bias), stateful=stateful,
     )
 
 
@@ -189,7 +141,7 @@ def ewmcorrelation(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                    out: str = "cor") -> DataFrame:
     """Melted EWM correlation tensor: rows (ts, key_i, key_j, cor) for
     key_i < key_j (symmetric; diagonal ≡ 1).  Reference `_ewm.py:688-921`."""
-    return _correlation_combined(df, n, key, ts, v, bias, state_df, out).drop(_STATE_COL)
+    return _correlation_apply(df, n, key, ts, v, bias, state_df, out)
 
 
 def ewmcorrelation_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -199,21 +151,18 @@ def ewmcorrelation_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
     """Stateful melted correlation tensor: (data, state) where state holds
     one packed XSTATE row per (key_i, key_j) pair — resume is bit-exact
     (reference ewmcorrelation_ `_ewm.py:688-770`)."""
-    combined = _correlation_combined(df, n, key, ts, v, bias, state_df, out)
-    return _split_state(combined, ["key_i", "key_j"], persist)
+    combined = _correlation_apply(df, n, key, ts, v, bias, state_df, out,
+                                  stateful=True)
+    return split_state(combined, ["key_i", "key_j"], persist)
 
 
-def _covariance_combined(df, n, key, ts, v, state_df, out):
+def _covariance_apply(df, n, key, ts, v, state_df, out, stateful=False):
     left = df.select(F.col(ts), F.col(key).alias("key_i"), F.col(v).alias("v_i"))
     right = df.select(F.col(ts), F.col(key).alias("key_j"), F.col(v).alias("v_j"))
     pairs = left.join(right, on=ts).filter(F.col("key_i") <= F.col("key_j"))
-
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
     return _pair_apply(
-        pairs, ["key_i", "key_j"], ts, "v_i", "v_j", [out], state_df, run
+        pairs, ["key_i", "key_j"], ts, "v_i", "v_j", [out], state_df,
+        _xcovar(n), stateful=stateful,
     )
 
 
@@ -222,7 +171,7 @@ def ewmcovariance(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                   out: str = "cov") -> DataFrame:
     """Melted EWM covariance tensor incl. the diagonal (variances).
     Reference `_ewm.py:535-685`."""
-    return _covariance_combined(df, n, key, ts, v, state_df, out).drop(_STATE_COL)
+    return _covariance_apply(df, n, key, ts, v, state_df, out)
 
 
 def ewmcovariance_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -230,5 +179,6 @@ def ewmcovariance_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                    out: str = "cov", persist: bool = True):
     """Stateful melted covariance tensor: (data, state) keyed on
     (key_i, key_j) (reference ewmcovariance_ `_ewm.py:535-614`)."""
-    combined = _covariance_combined(df, n, key, ts, v, state_df, out)
-    return _split_state(combined, ["key_i", "key_j"], persist)
+    combined = _covariance_apply(df, n, key, ts, v, state_df, out,
+                                 stateful=True)
+    return split_state(combined, ["key_i", "key_j"], persist)

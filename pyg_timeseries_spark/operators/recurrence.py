@@ -8,136 +8,85 @@ Reference: zmooth `_zmooth.py:8-115`; buffer `_rolling.py:294-332, 872-942`.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import recurrence_numpy as RK
+from pyg_timeseries_spark.operators._boundary import split_state, sweep_apply
 from pyg_timeseries_spark.operators._core import KEY, TS, VAL
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
+
+def _apply_recurrence(df, key, ts, v, out, state_df, spec, stateful=False):
+    """``spec`` = (aux columns, state length, run) with
+    ``run(a, aux_arrays, state|None) -> (res, state_vec)``."""
+    aux, state_len, run = spec
+
+    def sweep(pdf, prior):
+        a, *aux_arrays = [pdf[c].to_numpy(dtype=np.float64, na_value=np.nan)
+                          for c in [v] + aux]
+        res, s = run(a, aux_arrays, prior)
+        return [res], s
+
+    return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
+                       prior_lens=state_len, stateful=stateful,
+                       state_len=state_len)
 
 
-def _apply_recurrence(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    v: str,
-    out: str,
-    aux: list[str],
-    state_df: DataFrame | None,
-    state_len: int,
-    run,  # (a, aux_arrays, state|None) -> (res, state_vec)
-) -> DataFrame:
-    if state_df is not None:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out, T.DoubleType()),
-           T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        aux_arrays = [
-            pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in aux
-        ]
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == state_len
-            else None
-        )
-        res, s = run(a, aux_arrays, state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+def _zmooth(n, smooth_col, max_move, exc_zero):
+    def run(a, aux_arrays, state):
+        smooth = aux_arrays[0] if aux_arrays else None
+        return RK.zmooth(a, n, smooth=smooth, max_move=max_move,
+                         exc_zero=exc_zero, state=state)
+    return [smooth_col] if smooth_col else [], RK.ZMOOTH_STATE_LEN, run
 
 
-def _split(combined: DataFrame, key: str, persist: bool):
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+def _buffer(band, unit, rounding_band):
+    const_band = None if isinstance(band, str) else float(band)
+
+    def run(a, aux_arrays, state):
+        b = aux_arrays[0] if aux_arrays else const_band
+        return RK.buffer(a, b, unit=unit, rounding_band=rounding_band, state=state)
+    return [band] if isinstance(band, str) else [], RK.BUFFER_STATE_LEN, run
+
+
+def _tover(n, interval):
+    def run(a, aux_arrays, state):
+        return RK.rolling_tover(a, n=n, interval=interval, state=state)
+    return [], 2 * n + 3, run
 
 
 def zmooth(df: DataFrame, n: float, smooth_col: str | None = None,
            max_move: float = 4.2, exc_zero: bool = False, key: str = KEY,
            ts: str = TS, v: str = VAL, out: str = "zmooth",
            state_df: DataFrame | None = None) -> DataFrame:
-    aux = [smooth_col] if smooth_col else []
-
-    def run(a, aux_arrays, state):
-        smooth = aux_arrays[0] if aux_arrays else None
-        return RK.zmooth(a, n, smooth=smooth, max_move=max_move,
-                         exc_zero=exc_zero, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.ZMOOTH_STATE_LEN, run
-    ).drop(_STATE_COL)
+    return _apply_recurrence(df, key, ts, v, out, state_df,
+                             _zmooth(n, smooth_col, max_move, exc_zero))
 
 
 def zmooth_(df: DataFrame, n: float, smooth_col: str | None = None,
             max_move: float = 4.2, exc_zero: bool = False, key: str = KEY,
             ts: str = TS, v: str = VAL, out: str = "zmooth",
             state_df: DataFrame | None = None, persist: bool = True):
-    aux = [smooth_col] if smooth_col else []
-
-    def run(a, aux_arrays, state):
-        smooth = aux_arrays[0] if aux_arrays else None
-        return RK.zmooth(a, n, smooth=smooth, max_move=max_move,
-                         exc_zero=exc_zero, state=state)
-
-    combined = _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.ZMOOTH_STATE_LEN, run
-    )
-    return _split(combined, key, persist)
+    combined = _apply_recurrence(df, key, ts, v, out, state_df,
+                                 _zmooth(n, smooth_col, max_move, exc_zero),
+                                 stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def buffer(df: DataFrame, band, unit: float = 0.0, rounding_band: float = 0.0,
            key: str = KEY, ts: str = TS, v: str = VAL, out: str = "buffer",
            state_df: DataFrame | None = None) -> DataFrame:
     """``band`` is a float or the name of a band column."""
-    aux = [band] if isinstance(band, str) else []
-    const_band = None if isinstance(band, str) else float(band)
-
-    def run(a, aux_arrays, state):
-        b = aux_arrays[0] if aux_arrays else const_band
-        return RK.buffer(a, b, unit=unit, rounding_band=rounding_band, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.BUFFER_STATE_LEN, run
-    ).drop(_STATE_COL)
+    return _apply_recurrence(df, key, ts, v, out, state_df,
+                             _buffer(band, unit, rounding_band))
 
 
 def buffer_(df: DataFrame, band, unit: float = 0.0, rounding_band: float = 0.0,
             key: str = KEY, ts: str = TS, v: str = VAL, out: str = "buffer",
             state_df: DataFrame | None = None, persist: bool = True):
-    aux = [band] if isinstance(band, str) else []
-    const_band = None if isinstance(band, str) else float(band)
-
-    def run(a, aux_arrays, state):
-        b = aux_arrays[0] if aux_arrays else const_band
-        return RK.buffer(a, b, unit=unit, rounding_band=rounding_band, state=state)
-
-    combined = _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.BUFFER_STATE_LEN, run
-    )
-    return _split(combined, key, persist)
+    combined = _apply_recurrence(df, key, ts, v, out, state_df,
+                                 _buffer(band, unit, rounding_band),
+                                 stateful=True)
+    return split_state(combined, [key], persist)
 
 
 def rolling_tover(df: DataFrame, n: int = 256, interval: float | None = None,
@@ -146,20 +95,13 @@ def rolling_tover(df: DataFrame, n: int = 256, interval: float | None = None,
                   state_df: DataFrame | None = None) -> DataFrame:
     """Rolling turnover / annualized-risk ratio (reference
     `_rolling.py:417-443`)."""
-    def run(a, aux_arrays, state):
-        return RK.rolling_tover(a, n=n, interval=interval, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, [], state_df, 2 * n + 3, run
-    ).drop(_STATE_COL)
+    return _apply_recurrence(df, key, ts, v, out, state_df, _tover(n, interval))
 
 
 def rolling_tover_(df: DataFrame, n: int = 256, interval: float | None = None,
                    key: str = KEY, ts: str = TS, v: str = VAL,
                    out: str = "rolling_tover",
                    state_df: DataFrame | None = None, persist: bool = True):
-    def run(a, aux_arrays, state):
-        return RK.rolling_tover(a, n=n, interval=interval, state=state)
-
-    combined = _apply_recurrence(df, key, ts, v, out, [], state_df, 2 * n + 3, run)
-    return _split(combined, key, persist)
+    combined = _apply_recurrence(df, key, ts, v, out, state_df,
+                                 _tover(n, interval), stateful=True)
+    return split_state(combined, [key], persist)
