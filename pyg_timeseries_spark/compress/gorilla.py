@@ -66,6 +66,9 @@ class _BitReader:
         if bits == 1:  # the flag bits: most reads of a chunk
             return (self.data[pos >> 3] >> (7 - (pos & 7))) & 1
         last = (end + 7) >> 3
+        if last > len(self.data):  # a slice would clamp: truncated chunk
+            raise IndexError(
+                f"bit read past the end of a {len(self.data)}-byte chunk")
         word = int.from_bytes(self.data[pos >> 3:last], "big")
         return (word >> ((last << 3) - end)) & ((1 << bits) - 1)
 

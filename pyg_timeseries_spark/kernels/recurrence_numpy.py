@@ -261,7 +261,7 @@ def rolling_tover(a, n=256, interval=None, state=None):
         total_variance = float(state[2 * n + 1])
         total_trades = float(state[2 * n + 2])
     res = np.empty(a.shape[0])
-    prev = positions[j]
+    prev = positions[j - 1]  # the last position written (slot j is the oldest)
     total_years = n * interval
     for i in range(a.shape[0]):
         jj = (j + 1) % n

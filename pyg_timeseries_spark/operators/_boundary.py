@@ -5,28 +5,26 @@ EWMs, multibuffer and the tracking-error optimizer all run their kernel once
 per group in a grouped-map Arrow UDF.  Besides the operator's own columns,
 only two things may cross that boundary, and only when the call needs them:
 
-* **prior state**, only when the caller passes ``state_df``.  The saved
+* **prior state**, only when the caller passes ``state_df``: the saved
   ``(key, state array<double>)`` rows are broadcast-joined onto the input as
-  flat nullable doubles: ``__prior_n`` (the saved length, NULL for a key with
-  no saved state) and ``__prior0 ..``.  Never as a list column: Spark 4.1's
-  Arrow writer (``BatchedPythonArrowInput.writeSizedBatch``) sizes the batch
-  once per row, and for a list column whose rows are NULL
-  ``ListVector.setValueCount`` refills the offsets from the last set index on
-  each call, so a NULL ``array<double>`` cost O(rows²) per Arrow batch.  A
+  one ``__prior`` column, coalesced to an empty array for a key with no saved
+  state.  It must never hold a NULL: Spark 4.1's Arrow writer
+  (``BatchedPythonArrowInput.writeSizedBatch``) sizes the batch once per row,
+  and for a list column whose rows are NULL ``ListVector.setValueCount``
+  refills the offsets from the last set index on each call, so NULL rows of
+  an ``array<double>`` cost O(rows²) per Arrow batch.  Non-NULL rows, empty
+  ones included, advance that index and cost the same as flat doubles.  A
   saved state of a length the kernel does not accept is ignored (the kernel
-  restarts), as before.
-* **new state**, only for the stateful ``*_`` variants: flat doubles
-  ``__state0 ..`` set on each group's last row, whose ``__state_n`` holds the
-  state's length; :func:`split_state` packs them back into the public
-  ``state array<double>`` with ``F.array`` in the JVM.  A state whose width is
-  unknown at plan time, or wider than :data:`FLAT_STATE_MAX`, comes back as
-  one ``array<double>`` cell on the last row instead: the Python→JVM
-  direction reads Arrow batches without the per-row resize, and flat columns
-  would cost rows × width.
+  restarts).
+* **new state**, only for the stateful ``*_`` variants: one ``__state``
+  ``array<double>`` cell on each group's last row, NULL elsewhere, which
+  :func:`split_state` turns into the public ``state`` frame.  The
+  Python→JVM direction reads Arrow batches without the per-row resize, so
+  the NULL rows cost nothing there.
 
-NaN state elements come back as NULL in both encodings (Arrow's pandas
-conversion masks NaN), and a NULL prior element reaches the kernel as NaN,
-so a resume sees exactly the floats the previous call ended with.
+NaN state elements come back as NULL (Arrow's pandas conversion masks NaN),
+and a NULL prior element reaches the kernel as NaN, so a resume sees exactly
+the floats the previous call ended with.
 """
 
 from __future__ import annotations
@@ -39,63 +37,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-PRIOR_N = "__prior_n"
-STATE_N = "__state_n"
-STATE_ARR = "__state"
-FLAT_STATE_MAX = 64
+PRIOR = "__prior"
+STATE = "__state"
 
 
-def _prior(i: int) -> str:
-    return f"__prior{i}"
-
-
-def _state(i: int) -> str:
-    return f"__state{i}"
-
-
-def _with_prior(df: DataFrame, state_df: DataFrame, keys: list[str],
-                width: int | None) -> tuple[DataFrame, int]:
-    """Broadcast-join the flat prior columns; ``width`` None reads the widest
-    saved state from ``state_df`` (one small job)."""
-    if width is None:
-        width = state_df.select(F.max(F.size("state"))).first()[0] or 0
-    prior = state_df.select(
-        *keys, F.size("state").alias(PRIOR_N),
-        *[F.get("state", i).alias(_prior(i)) for i in range(width)])
+def _with_prior(df: DataFrame, state_df: DataFrame, keys: list[str]) -> DataFrame:
+    prior = state_df.select(*keys, F.col("state").alias(PRIOR))
     # one small row per key: always broadcast, never shuffle the fact side
-    return df.join(F.broadcast(prior), on=keys, how="left"), width
+    df = df.join(F.broadcast(prior), on=keys, how="left")
+    return df.withColumn(PRIOR, F.coalesce(PRIOR, F.array().cast("array<double>")))
 
 
-def _read_prior(pdf: pd.DataFrame, width: int,
-                lens: tuple[int, ...] | None) -> np.ndarray | None:
-    n = pdf[PRIOR_N].iat[0]
-    if pd.isna(n):
+def _read_prior(pdf: pd.DataFrame, lens: tuple[int, ...] | None) -> np.ndarray | None:
+    s = pdf[PRIOR].iat[0]
+    if len(s) == 0 or (lens is not None and len(s) not in lens):
         return None
-    n = int(n)
-    if n > width or (lens is not None and n not in lens):
-        return None
-    return np.array([pdf[_prior(i)].iat[0] for i in range(n)], dtype=np.float64)
+    return np.asarray(s, dtype=np.float64)
 
 
-def _put_state(out: pd.DataFrame, s, width: int | None) -> pd.DataFrame:
-    """Append the state columns, non-NULL only on the last row (``s`` None:
+def _put_state(out: pd.DataFrame, s) -> pd.DataFrame:
+    """Append the state column, non-NULL only on the last row (``s`` None:
     the group produced no rows)."""
-    n = len(out)
-    if width is None:
-        out[STATE_ARR] = None
-        if n and s is not None:
-            out.at[n - 1, STATE_ARR] = [float(x) for x in s]
-        return out
-    flat = np.full((n, width + 1), np.nan)
-    if n and s is not None:
-        s = np.asarray(s, dtype=np.float64)
-        if len(s) > width:
-            raise ValueError(f"kernel state has {len(s)} > {width} elements")
-        flat[-1, 0] = len(s)
-        flat[-1, 1:1 + len(s)] = s
-    names = [STATE_N] + [_state(i) for i in range(width)]
-    return pd.concat(
-        [out.reset_index(drop=True), pd.DataFrame(flat, columns=names)], axis=1)
+    cell = np.full(len(out), None, dtype=object)
+    if len(out) and s is not None:
+        cell[-1] = [float(x) for x in s]
+    out[STATE] = cell
+    return out
 
 
 def kernel_apply(
@@ -106,7 +73,6 @@ def kernel_apply(
     state_df: DataFrame | None = None,
     prior_lens: int | Sequence[int] | None = None,
     stateful: bool = False,
-    state_len: int | None = None,
     other: DataFrame | None = None,
 ) -> DataFrame:
     """``groupBy(keys).applyInPandas`` (or, with ``other``, a cogroup of
@@ -119,36 +85,27 @@ def kernel_apply(
 
     ``prior_lens`` lists the saved lengths the kernel accepts; ``None``
     accepts any length (the kernel checks it).  ``stateful`` adds the state
-    columns :func:`split_state` reads; ``state_len`` bounds the state's
-    length (``None``: unknown at plan time).
+    column :func:`split_state` reads.
     """
     keys = list(keys)
     lens = (prior_lens,) if isinstance(prior_lens, int) else (
         None if prior_lens is None else tuple(prior_lens))
-    width = None
-    if state_df is not None:
-        df, width = _with_prior(df, state_df, keys,
-                                None if lens is None else max(lens))
+    resume = state_df is not None  # the UDF must not capture the frame
+    if resume:
+        df = _with_prior(df, state_df, keys)
     out_fields = list(fields)
-    flat = None
     if stateful:
-        if state_len is not None and state_len <= FLAT_STATE_MAX:
-            flat = state_len
-            out_fields += [T.StructField(n, T.DoubleType()) for n in
-                           [STATE_N] + [_state(i) for i in range(flat)]]
-        else:
-            out_fields.append(
-                T.StructField(STATE_ARR, T.ArrayType(T.DoubleType())))
+        out_fields.append(T.StructField(STATE, T.ArrayType(T.DoubleType())))
     schema = T.StructType(out_fields)
 
     def finish(res):
         out, s = res
-        return _put_state(out, s, flat) if stateful else out
+        return _put_state(out, s) if stateful else out
 
     def prior_of(pdf):
-        if width is None or len(pdf) == 0:
+        if not resume or len(pdf) == 0:
             return None
-        return _read_prior(pdf, width, lens)
+        return _read_prior(pdf, lens)
 
     if other is None:
         def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -196,17 +153,7 @@ def split_state(combined: DataFrame, keys: Sequence[str],
     ``Dict(data=…, state=…)`` pair, _decorators.py:21-31)."""
     if persist:
         combined = combined.persist()
-    cols = combined.columns
-    if STATE_ARR in cols:
-        state_cols = [STATE_ARR]
-        last = F.col(STATE_ARR).isNotNull()
-        packed = F.col(STATE_ARR)
-    else:
-        flat = [c for c in cols
-                if c.startswith(STATE_ARR) and c[len(STATE_ARR):].isdigit()]
-        state_cols = [STATE_N] + flat
-        last = F.col(STATE_N).isNotNull()
-        packed = F.slice(F.array(*flat), 1, F.col(STATE_N).cast("int"))
-    data = combined.drop(*state_cols)
-    state = combined.filter(last).select(*keys, packed.alias("state"))
+    data = combined.drop(STATE)
+    state = combined.filter(F.col(STATE).isNotNull()).select(
+        *keys, F.col(STATE).alias("state"))
     return data, state

@@ -69,13 +69,9 @@ def _ewm_apply(
                         wgt=col(pdf, wgt_col), state=prior, **kernel_kwargs)
         return [res], s
 
-    # exc_zero / max_move select the guarded sweep, whose state is longer
-    guarded = (kernel_kwargs.get("exc_zero")
-               or kernel_kwargs.get("max_move") is not None)
     return sweep_apply(
         df, [key], ts, [out], sweep, state_df=state_df,
-        prior_lens=(STATE_LEN, GSTATE_LEN), stateful=stateful,
-        state_len=GSTATE_LEN if guarded else STATE_LEN)
+        prior_lens=(STATE_LEN, GSTATE_LEN), stateful=stateful)
 
 
 def _make_op(kernel_name: str, default_out: str):

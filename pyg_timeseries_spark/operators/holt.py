@@ -76,8 +76,7 @@ def _holt_apply(df, alpha, beta, horizon, key, ts, v, out, state_df,
         return [res], s
 
     return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
-                       prior_lens=HOLT_STATE_LEN, stateful=stateful,
-                       state_len=HOLT_STATE_LEN)
+                       prior_lens=HOLT_STATE_LEN, stateful=stateful)
 
 
 def holt(
@@ -196,7 +195,7 @@ def _hw_apply(df, alpha, beta, gamma, m, key, ts, v, out, state_df,
         return [res], s
 
     return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
-                       prior_lens=3 + m, stateful=stateful, state_len=3 + m)
+                       prior_lens=3 + m, stateful=stateful)
 
 
 def holt_winters(

@@ -87,8 +87,7 @@ def _kalman_apply(df, q, r, key, ts, v, out, state_df, stateful=False):
         return [res], s
 
     return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
-                       prior_lens=KALMAN_STATE_LEN, stateful=stateful,
-                       state_len=KALMAN_STATE_LEN)
+                       prior_lens=KALMAN_STATE_LEN, stateful=stateful)
 
 
 def kalman(

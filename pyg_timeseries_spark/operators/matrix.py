@@ -20,8 +20,7 @@ from pyg_timeseries_spark.operators._core import KEY, TS
 
 def _matrix_apply(df, key, ts, out, state_df, run, stateful=False):
     """``run(pdf, prior) -> (per-row result arrays, state)``.  The state's
-    length depends on the feature width m, so ``run`` validates the prior
-    and the state width is open."""
+    length depends on the feature width m, so ``run`` validates the prior."""
 
     def sweep(pdf, prior):
         res, s = run(pdf, prior)

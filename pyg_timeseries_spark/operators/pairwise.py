@@ -34,8 +34,7 @@ def _pair_apply(df, key_cols, ts, a, b, out_cols, state_df, run,
         return run(col(pdf, a), col(pdf, b), prior, col(pdf, time_col))
 
     return sweep_apply(df, key_cols, ts, out_cols, sweep, state_df=state_df,
-                       prior_lens=PK.XSTATE_LEN, stateful=stateful,
-                       state_len=PK.XSTATE_LEN)
+                       prior_lens=PK.XSTATE_LEN, stateful=stateful)
 
 
 # kernel runs: (a, b, state, time) -> ([outputs], state)

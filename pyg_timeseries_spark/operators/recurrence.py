@@ -27,8 +27,7 @@ def _apply_recurrence(df, key, ts, v, out, state_df, spec, stateful=False):
         return [res], s
 
     return sweep_apply(df, [key], ts, [out], sweep, state_df=state_df,
-                       prior_lens=state_len, stateful=stateful,
-                       state_len=state_len)
+                       prior_lens=state_len, stateful=stateful)
 
 
 def _zmooth(n, smooth_col, max_move, exc_zero):

@@ -6,12 +6,14 @@ the pandas-UDF kernels.
 
 The per-key sequential kernels (ewm, pairwise, recurrence, holt, kalman,
 matrix, multibuffer, tracking error) cross into Python through one boundary,
-``operators/_boundary.py``, which ships prior and new state as flat doubles
-and only when the call needs them.  Two fixed costs used to dominate that
-boundary, not the kernels (README "JVM↔Python boundary"):
+``operators/_boundary.py``, which moves prior and new state only when the
+call needs them and never sends Python a list column with NULL rows.  Two
+fixed costs used to dominate that boundary, not the kernels (README
+"JVM↔Python boundary"):
 
 * a NULL ``array<double>`` prior column cost O(rows²) per Arrow batch in the
-  JVM's Arrow writer — the boundary no longer ships list columns to Python;
+  JVM's Arrow writer — a stateless call ships no list column to Python, and
+  a resume's prior is never NULL;
 * every Python task re-read the central directory of each zip on the
   workers' path — on ``local[...]`` masters the workers start through
   ``pyg_timeseries_daemon``, which swaps ``pyspark.zip`` for the unzipped
@@ -46,10 +48,29 @@ def host_cpus() -> int:
         return os.cpu_count() or 1
 
 
+# the container's memory limit, cgroup v2 then v1 (v2 writes "max" when unset)
+CGROUP_MEM_LIMITS = ("/sys/fs/cgroup/memory.max",
+                     "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def host_mem_bytes(limit_files: tuple[str, ...] = CGROUP_MEM_LIMITS) -> int:
+    """Physical RAM, or the cgroup memory limit when that is smaller."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mem = min(mem, int(raw))
+    return mem
+
+
 def host_driver_mem() -> str:
-    """``DRIVER_MEM_SHARE`` of physical RAM, as a Spark memory string."""
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{int(phys * DRIVER_MEM_SHARE) >> 20}m"
+    """``DRIVER_MEM_SHARE`` of :func:`host_mem_bytes`, as a Spark memory
+    string."""
+    return f"{int(host_mem_bytes() * DRIVER_MEM_SHARE) >> 20}m"
 
 
 def is_local(master: str) -> bool:
@@ -96,8 +117,9 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
     host's cores); the driver heap to ``$SPARK_DRIVER_MEM`` (default 40% of
-    physical RAM).  ``shuffle_partitions`` defaults to the local core count —
-    at cluster scale you would set this to ~2-3x total executor cores instead.
+    physical RAM, or of the cgroup memory limit when smaller).
+    ``shuffle_partitions`` defaults to the local core count — at cluster
+    scale you would set this to ~2-3x total executor cores instead.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     if master is None:

@@ -1,6 +1,7 @@
 """The kernel boundary's contract (operators/_boundary.py): a stateless call
 ships no list column to Python — the operator's own input columns only — and
-a resume ships its prior as flat doubles, never as an ``array<double>``."""
+a resume ships its prior as one ``array<double>`` that cannot be NULL (NULL
+list rows cost O(rows²) in Spark's Arrow writer)."""
 
 import json
 
@@ -43,12 +44,23 @@ def python_inputs(df) -> list[T.StructType]:
     return out
 
 
-def list_columns(df, own=()) -> list[str]:
+def list_fields(df, own=()) -> list[T.StructField]:
     """Array-typed columns shipped to Python, beyond the caller's ``own``."""
     schemas = python_inputs(df)
     assert schemas, "no grouped-map Python node in the plan"
-    return [f.name for s in schemas for f in s.fields
+    return [f for s in schemas for f in s.fields
             if isinstance(f.dataType, T.ArrayType) and f.name not in own]
+
+
+def list_columns(df, own=()) -> list[str]:
+    return [f.name for f in list_fields(df, own)]
+
+
+def assert_non_null_prior(out):
+    """The resume's only list column is the prior, and it is never NULL."""
+    fields = list_fields(out)
+    assert [f.name for f in fields] == ["__prior"]
+    assert not fields[0].nullable
 
 
 @pytest.fixture(scope="module")
@@ -109,25 +121,23 @@ def test_stateless_call_ships_no_list_column(name, series_df, pair_df,
     assert not [c for c in out.columns if c.startswith("__")]
 
 
-def test_resume_ships_flat_prior(spark, series_df):
+def test_resume_ships_non_null_prior(spark, series_df):
     cut = F.lit("2024-01-01 02:00:00").cast("timestamp")
     _, state = M.ewma_(series_df.filter(F.col("ts") < cut), 10)
     tail = series_df.filter(F.col("ts") >= cut)
     for out in (M.ewma(tail, 10, state_df=state),
                 M.ewma_(tail, 10, state_df=state)[0],
                 H.holt(tail, 0.3, 0.1, state_df=state)):
-        assert list_columns(out) == []
-        inputs = python_inputs(out)
-        assert any("__prior_n" in s.names for s in inputs)
+        assert_non_null_prior(out)
 
 
-def test_cogroup_resume_ships_flat_prior(spark, book):
+def test_cogroup_resume_ships_non_null_prior(spark, book):
     pos, corr = book
     cut = F.lit("2024-01-04").cast("timestamp")
     _, state = MB.multibuffer_(pos.filter(F.col("ts") < cut), corr=corr)
     out = MB.multibuffer(pos.filter(F.col("ts") >= cut), corr=corr,
                          state_df=state)
-    assert list_columns(out) == []
+    assert_non_null_prior(out)
     assert out.count() == 6
 
 

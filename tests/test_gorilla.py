@@ -2,6 +2,7 @@
 round-trip + compression-ratio sanity."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyg_timeseries_spark.compress import gorilla
@@ -72,3 +73,19 @@ def F_round(c):
     from pyspark.sql import functions as F
 
     return F.col(c).cast("double").alias(c)
+
+
+def test_truncated_chunk_raises():
+    """A read past the end of a stored chunk fails loudly, never returns
+    bits from a shorter slice."""
+    with pytest.raises(IndexError):
+        gorilla._BitReader(b"\xff").read(12)
+    rng = np.random.default_rng(3)
+    vals = gorilla.encode_values(rng.normal(size=64))  # wide XOR payloads
+    # a jump far beyond the 12-bit delta-of-delta range: the 64-bit escape
+    ts = gorilla.encode_timestamps(np.array([0, 60, 2**40], dtype=np.int64))
+    for blob, decode in ((vals, gorilla.decode_values),
+                         (ts, gorilla.decode_timestamps)):
+        for cut in (1, 2, 3):
+            with pytest.raises(IndexError):
+                decode(blob[:-cut])
